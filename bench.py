@@ -200,24 +200,36 @@ def apply_once(spark, n_events: int, log_dir: str, n_files: int, workdir: str,
     wall = time.time() - t0
     rows = table.read().count()
     lease = pipe.current_lease()
-    # per-micro-batch walls, derived AFTER timing from the lease ring's
-    # commit mtimes (each batch_<id>.json is written at its commit): batch i
-    # wall ~= mtime(i) - mtime(i-1), batch 0 from t0. Zero probe overhead;
-    # the droop diagnosis (is per-batch cost flat or growing across a replay?)
-    # reads these directly.
-    hist = sorted(glob.glob(f"{workdir}/table/_lease/batch_*.json"),
-                  key=lambda p: int(os.path.basename(p)[6:-5]))
-    mt = [os.path.getmtime(p) for p in hist]
-    batch_walls = ([round(mt[0] - t0, 2)] if mt else []) + [
-        round(b - a, 2) for a, b in zip(mt, mt[1:])]
-    return {
+    batches = int(lease["batch_id"]) + 1 if lease else None
+    out = {
         "events": n_events,
         "wall_sec": round(wall, 2),
         "events_per_sec": round(n_events / wall, 1),
         "final_rows": rows,
-        "batches": int(lease["batch_id"]) + 1 if lease else None,
-        "batch_walls": batch_walls,
+        "batches": batches,
     }
+    walls = ring_batch_walls(f"{workdir}/table/_lease", t0, batches)
+    if walls is not None:
+        out["batch_walls"] = walls
+    return out
+
+
+def ring_batch_walls(lease_dir: str, t0: float, batches: int | None):
+    """Per-micro-batch walls, derived AFTER timing from the lease ring's
+    commit mtimes (each batch_<id>.json is written at its commit): batch i
+    wall ~= mtime(i) - mtime(i-1), batch 0 from t0. Zero probe overhead; the
+    droop diagnosis (is per-batch cost flat or growing across a replay?)
+    reads these directly. Ordered by the ring's own parser, malformed names
+    skipped; None unless the ring holds every batch — a pruned ring would
+    misattribute walls."""
+    from change_data_capturer_ms_spark.streaming.pipeline import _hist_batch_id
+
+    hist = sorted((p for p in glob.glob(os.path.join(lease_dir, "batch_*.json"))
+                   if _hist_batch_id(p) >= 0), key=_hist_batch_id)
+    if not hist or len(hist) != batches:
+        return None
+    mt = [os.path.getmtime(p) for p in hist]
+    return [round(mt[0] - t0, 2)] + [round(b - a, 2) for a, b in zip(mt, mt[1:])]
 
 
 def bench_apply(spark, n_events: int, workdir: str, n_batches: int = 4,

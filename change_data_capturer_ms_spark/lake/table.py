@@ -49,13 +49,15 @@ from __future__ import annotations
 import glob
 import os
 import uuid
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from change_data_capturer_ms_spark.errors import MissingResourceError
-from change_data_capturer_ms_spark.lake.manifest import FileEntry, Manifest, ManifestStore
+from change_data_capturer_ms_spark.lake.manifest import (
+    FileEntry, Manifest, ManifestStore, prune_ledger)
 from change_data_capturer_ms_spark.operators.dedupe import lww_dedupe
 
 SEQ_META_COL = "_last_seq"
@@ -388,8 +390,7 @@ class LakeTable:
         that handle move the branch ref, never `_current`, so main readers see
         nothing until `fast_forward` publishes the head. This is Iceberg's
         branch WAP layout (write to branch `audit` → validate → fast-forward
-        main); the pipeline's audit_fn gate composes the same primitives via
-        rollback instead — both are supported shapes.
+        main); the pipeline's audit_fn gate stages every micro-batch this way.
         """
         import re
 
@@ -476,24 +477,8 @@ class LakeTable:
         cur = self.manifest()
         if version == cur.version:
             return {"skipped": True, "version": cur.version}
-        tgt = self.manifest(version)
-        new = Manifest(
-            version=self.store.next_version(),
-            parent=cur.version,
-            schema_json=tgt.schema_json,
-            schema_version=tgt.schema_version,
-            n_buckets=tgt.n_buckets,
-            key_cols=list(tgt.key_cols),
-            files=list(tgt.files),
-            committed_batches=list(tgt.committed_batches),
-            lease=dict(tgt.lease),
-            batch_watermarks=dict(tgt.batch_watermarks),
-            write_mode=tgt.write_mode,
-            bloom_cols=list(tgt.bloom_cols),
-            bucket_cols=list(tgt.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=cur.version, branch=self._branch)
-        return {"skipped": False, "version": new.version, "restored": version}
+        v = self._commit(cur, base=self.manifest(version))
+        return {"skipped": False, "version": v, "restored": version}
 
     def _frame(self, m: Manifest, files: list[FileEntry],
                include_deleted: bool) -> DataFrame:
@@ -745,11 +730,8 @@ class LakeTable:
         op_col: str = "op",
         batch_id: int | str = 0,
         source_id: str = "changelog",
-        lease_token: str | None = None,
-        delete_op: str = "delete",
         tiebreakers: list[str] | None = None,
         lineage: list[dict] | None = None,
-        planning_df: DataFrame | None = None,
         planning_stats: list[tuple[int, int, int]] | None = None,
     ) -> dict:
         """MERGE the micro-batch into the table; returns commit metrics.
@@ -761,7 +743,6 @@ class LakeTable:
         returns {"skipped": True} (E21 exactly-once).
         """
         m = self.manifest()
-        ledger_key = f"{source_id}:{batch_id}"
         if m.is_committed(source_id, batch_id):
             return {"skipped": True, "version": m.version, "batch_id": batch_id}
 
@@ -773,9 +754,6 @@ class LakeTable:
                                                  batch.schema, payload_cols,
                                                  bucket_key=m.bucket_key)
         batch = _normalize_key_types(batch, keys, schema, "merge")
-        if planning_df is not None:
-            planning_df = _normalize_key_types(planning_df, keys, schema,
-                                               "merge")
         out_cols = [f.name for f in schema.fields]
 
         # 1) cheap planning job: affected buckets + input metrics from the RAW
@@ -783,16 +761,14 @@ class LakeTable:
         #    pandas-UDF projections), so the expensive transform pipeline does NOT
         #    execute here. Distinct buckets of the raw batch equal distinct buckets
         #    of the deduped batch (dedupe keeps ≥1 row per key), so pruning is exact.
-        #    `planning_df` (same rows as batch, pre-transform) lets the caller skip
-        #    even the transform stage's repartition in this job; `planning_stats`
-        #    = precomputed [(bucket, n, max_seq)] skips the job entirely (the
-        #    pipeline folds it into its lineage aggregation — one job, not two).
+        #    `planning_stats` = precomputed [(bucket, n, max_seq)] skips the job
+        #    entirely (the pipeline folds it into its lineage aggregation — one
+        #    job, not two).
         if planning_stats is not None:
             agg = [{"_bucket": b, "n": n, "max_seq": s} for b, n, s in planning_stats]
         else:
             agg = (
-                (planning_df if planning_df is not None else batch)
-                .select(*keys, op_col, seq_col)
+                batch.select(*keys, op_col, seq_col)
                 .withColumn("_bucket", bucket_expr(m.bucket_key, n_buckets))
                 .groupBy("_bucket")
                 .agg(
@@ -809,10 +785,9 @@ class LakeTable:
             parent_ms = m.lease.get("metrics", {}).get("max_seq")
             metrics = {"rows": 0, "upserts": 0, "deletes": 0,
                        "max_seq": -1 if parent_ms is None else int(parent_ms)}
-            v = self._commit(m, m.files, schema, schema_version, ledger_key,
-                             source_id, batch_id, lease_token, metrics, lineage)
-            return {"skipped": False, "version": v, "batch_id": batch_id,
-                    "metrics": metrics}
+            return self._commit_batch(m, source_id, batch_id, metrics, lineage,
+                                      schema_json=schema.json(),
+                                      schema_version=schema_version)
         affected = {int(r["_bucket"]) for r in agg}
         batch_rows = sum(r["n"] for r in agg)
         # monotone high watermark: micro-batches are not seq-contiguous (file
@@ -869,7 +844,7 @@ class LakeTable:
         winners = winners.observe(
             obs,
             F.sum(
-                F.when((F.col(op_col) == delete_op) & (F.col("_prio") == 1), 1)
+                F.when((F.col(op_col) == "delete") & (F.col("_prio") == 1), 1)
                 .otherwise(0)
             ).alias("delete_winners"),
             F.sum(F.when(F.col("_prio") == 1, 1).otherwise(0)).alias("batch_winners"),
@@ -895,11 +870,8 @@ class LakeTable:
         final = aligned.select(*[_out(c) for c in out_cols])
 
         # 5) cow: rewrite affected buckets; mor: append the deltas, keep all files
-        nv = self.store.next_version()
-        new_files = self._write_buckets(final, m.bucket_key, n_buckets, nv,
-                                        len(affected), bloom_cols=m.bloom_cols)
-        carried = (list(m.files) if mor
-                   else [f for f in m.files if f.bucket not in affected])
+        nv, new_files, files = self._write_snapshot(m, final, affected,
+                                                    carry_all=mor)
         rows_written = sum(f.rows for f in new_files)
         wm = obs.get
         batch_winners = int(wm.get("batch_winners") or 0)
@@ -913,11 +885,10 @@ class LakeTable:
             "buckets_total": n_buckets,
             "max_seq": int(max_seq),
         }
-        self._commit(m, carried + new_files, schema, schema_version, ledger_key,
-                     source_id, batch_id, lease_token, metrics, lineage,
-                     version=nv)
-        return {"skipped": False, "version": nv, "batch_id": batch_id,
-                "metrics": metrics}
+        return self._commit_batch(m, source_id, batch_id, metrics, lineage,
+                                  version=nv, files=files,
+                                  schema_json=schema.json(),
+                                  schema_version=schema_version)
 
     def merge_into(
         self,
@@ -981,7 +952,6 @@ class LakeTable:
         if isinstance(when_matched_update, str) and when_matched_update != "all":
             raise ValueError("when_matched_update: expected 'all', a dict, or None")
         m = self.manifest()
-        ledger_key = f"{source_id}:{batch_id}"
         if m.is_committed(source_id, batch_id):
             return {"skipped": True, "version": m.version, "batch_id": batch_id}
         keys = m.key_cols
@@ -1026,10 +996,9 @@ class LakeTable:
             )
         if not agg:
             metrics = {"rows": 0, "upserts": 0, "deletes": 0, "max_seq": parent_ms}
-            v = self._commit(m, m.files, schema, schema_version, ledger_key,
-                             source_id, batch_id, None, metrics, None)
-            return {"skipped": False, "version": v,
-                    "batch_id": batch_id, "metrics": metrics}
+            return self._commit_batch(m, source_id, batch_id, metrics,
+                                      schema_json=schema.json(),
+                                      schema_version=schema_version)
         affected = {int(r["_bucket"]) for r in agg}
 
         existing = self.read(buckets=affected, include_deleted=True)
@@ -1113,11 +1082,7 @@ class LakeTable:
               for a in ("insert", "update", "delete")],
         )
         final = out.drop("_action").select(*[f.name for f in schema.fields])
-        nv = self.store.next_version()
-        new_files = self._write_buckets(final, m.bucket_key, m.n_buckets, nv,
-                                        len(affected), bloom_cols=m.bloom_cols)
-        carried = (list(m.files) if mor
-                   else [f for f in m.files if f.bucket not in affected])
+        nv, _, files = self._write_snapshot(m, final, affected, carry_all=mor)
         got = obs.get
         inserts = int(got.get("inserts") or 0)
         updates = int(got.get("updates") or 0)
@@ -1132,10 +1097,10 @@ class LakeTable:
             "buckets_total": m.n_buckets,
             "max_seq": seq_val,
         }
-        self._commit(m, carried + new_files, schema, schema_version, ledger_key,
-                     source_id, batch_id, None, metrics, None, version=nv)
-        return {"skipped": False, "version": nv, "batch_id": batch_id,
-                "metrics": metrics}
+        return self._commit_batch(m, source_id, batch_id, metrics,
+                                  version=nv, files=files,
+                                  schema_json=schema.json(),
+                                  schema_version=schema_version)
 
     # -- maintenance ----------------------------------------------------------
 
@@ -1183,27 +1148,8 @@ class LakeTable:
         touches only buckets holding matches. Exactly-once: (source_id,
         batch_id) goes through the ledger, so a retried erasure job is a no-op.
         """
-        if filters is None and predicate is None:
-            raise ValueError("delete_where: need filters and/or predicate")
-        if batch_id is None:
-            batch_id = self._mutation_batch_id("delete", filters, predicate)
-        matches = (self.read_where(filters) if filters is not None
-                   else self.read())
-        if predicate is not None:
-            matches = matches.filter(predicate)
-        keys = self.manifest().key_cols
-        src = matches.select(*keys)
-        # live LWW state is key-unique by construction — skip the extra
-        # uniqueness-proof aggregation
-        return self.merge_into(
-            src,
-            when_matched_update=None,
-            when_matched_delete=True,
-            when_not_matched_insert=None,
-            batch_id=batch_id,
-            source_id=source_id,
-            validate_source_unique=False,
-        )
+        return self._merge_where("delete", filters, predicate, batch_id,
+                                 source_id)
 
     def update_where(
         self,
@@ -1224,22 +1170,30 @@ class LakeTable:
         `filters` (zone-map form) and/or `predicate` (arbitrary Column) select
         the rows, composing with AND — same contract as `delete_where`.
         """
-        if filters is None and predicate is None:
-            raise ValueError("update_where: need filters and/or predicate")
         if not set_exprs:
             raise ValueError("update_where: set_exprs must be non-empty")
+        return self._merge_where("update", filters, predicate, batch_id,
+                                 source_id, set_exprs)
+
+    def _merge_where(self, kind: str, filters, predicate, batch_id, source_id,
+                     set_exprs: dict | None = None) -> dict:
+        """The keys of the LIVE rows matching `filters` AND `predicate`,
+        merged back in as a tombstone (kind "delete") or an update."""
+        if filters is None and predicate is None:
+            raise ValueError(f"{kind}_where: need filters and/or predicate")
         if batch_id is None:
-            batch_id = self._mutation_batch_id(
-                "update", filters, predicate, set_exprs)
+            batch_id = self._mutation_batch_id(kind, filters, predicate,
+                                               set_exprs)
         matches = (self.read_where(filters) if filters is not None
                    else self.read())
         if predicate is not None:
             matches = matches.filter(predicate)
-        keys = self.manifest().key_cols
+        # the merge source is KEYS-ONLY, and live LWW state is key-unique by
+        # construction — skip the extra uniqueness-proof aggregation
         return self.merge_into(
-            matches.select(*keys),
-            when_matched_update=dict(set_exprs),
-            when_matched_delete=None,
+            matches.select(*self.manifest().key_cols),
+            when_matched_update=None if set_exprs is None else dict(set_exprs),
+            when_matched_delete=True if set_exprs is None else None,
             when_not_matched_insert=None,
             batch_id=batch_id,
             source_id=source_id,
@@ -1303,37 +1257,13 @@ class LakeTable:
 
             df = df.withColumn("_zkey", zorder_key(df, zorder_cols))
             sort_cols, drop_after_sort = ["_zkey"], ["_zkey"]
-        nv = self.store.next_version()
-        new_files = self._write_buckets(df, m.bucket_key, m.n_buckets,
-                                        nv, len(victims),
-                                        sort_cols=sort_cols,
-                                        drop_after_sort=drop_after_sort,
-                                        bloom_cols=m.bloom_cols)
-        carried = [f for f in m.files if f.bucket not in victims]
+        nv, new_files, files = self._write_snapshot(
+            m, df, set(victims), sort_cols=sort_cols,
+            drop_after_sort=drop_after_sort)
         # maintenance commit: same atomic protocol, but the resume lease is
         # carried over untouched — compaction must never move the CDC cursor
-        from change_data_capturer_ms_spark.lake.manifest import prune_ledger
-
-        batches, watermarks = prune_ledger(
-            m.committed_batches + [f"maintenance:compact-v{nv}"],
-            m.batch_watermarks,
-        )
-        new = Manifest(
-            version=nv,
-            parent=m.version,
-            schema_json=m.schema_json,
-            schema_version=m.schema_version,
-            n_buckets=m.n_buckets,
-            key_cols=m.key_cols,
-            files=carried + new_files,
-            committed_batches=batches,
-            lease=dict(m.lease),
-            batch_watermarks=watermarks,
-            write_mode=m.write_mode,
-            bloom_cols=m.bloom_cols,
-            bucket_cols=list(m.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=m.version, branch=self._branch)
+        self._commit(m, ledger_key=f"maintenance:compact-v{nv}", version=nv,
+                     files=files)
         return {"compacted_buckets": len(victims), "version": nv,
                 "files_before": sum(len(v) for v in victims.values()),
                 "files_after": len(new_files)}
@@ -1550,33 +1480,10 @@ class LakeTable:
         if new_n_buckets == m.n_buckets:
             return {"rebucketed": False, "version": m.version,
                     "n_buckets": m.n_buckets}
-        df = self.read(include_deleted=True)
-        nv = self.store.next_version()
-        new_files = self._write_buckets(df, m.bucket_key, new_n_buckets,
-                                        nv, new_n_buckets,
-                                        bloom_cols=m.bloom_cols)
-        from change_data_capturer_ms_spark.lake.manifest import prune_ledger
-
-        batches, watermarks = prune_ledger(
-            m.committed_batches + [f"maintenance:rebucket-v{nv}"],
-            m.batch_watermarks,
-        )
-        new = Manifest(
-            version=nv,
-            parent=m.version,
-            schema_json=m.schema_json,
-            schema_version=m.schema_version,
-            n_buckets=new_n_buckets,
-            key_cols=m.key_cols,
-            files=new_files,
-            committed_batches=batches,
-            lease=dict(m.lease),
-            batch_watermarks=watermarks,
-            write_mode=m.write_mode,
-            bloom_cols=m.bloom_cols,
-            bucket_cols=list(m.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=m.version, branch=self._branch)
+        nv, new_files, _ = self._write_snapshot(
+            m, self.read(include_deleted=True), None, n_buckets=new_n_buckets)
+        self._commit(m, ledger_key=f"maintenance:rebucket-v{nv}", version=nv,
+                     n_buckets=new_n_buckets, files=new_files)
         return {"rebucketed": True, "version": nv,
                 "n_buckets": new_n_buckets,
                 "files": len(new_files)}
@@ -1625,33 +1532,9 @@ class LakeTable:
         if not victims:
             return {"expired": 0, "version": m.version}
         keep = self.read(buckets=victims, include_deleted=True).filter(~expirable)
-        nv = self.store.next_version()
-        new_files = self._write_buckets(keep, m.bucket_key, m.n_buckets,
-                                        nv, len(victims),
-                                        bloom_cols=m.bloom_cols)
-        carried = [f for f in m.files if f.bucket not in victims]
-        from change_data_capturer_ms_spark.lake.manifest import prune_ledger
-
-        batches, watermarks = prune_ledger(
-            m.committed_batches + [f"maintenance:expire-tombstones-v{nv}"],
-            m.batch_watermarks,
-        )
-        new = Manifest(
-            version=nv,
-            parent=m.version,
-            schema_json=m.schema_json,
-            schema_version=m.schema_version,
-            n_buckets=m.n_buckets,
-            key_cols=m.key_cols,
-            files=carried + new_files,
-            committed_batches=batches,
-            lease=dict(m.lease),
-            batch_watermarks=watermarks,
-            write_mode=m.write_mode,
-            bloom_cols=m.bloom_cols,
-            bucket_cols=list(m.bucket_cols),
-        )
-        self.store.commit(new, expected_parent=m.version, branch=self._branch)
+        nv, _, files = self._write_snapshot(m, keep, victims)
+        self._commit(m, ledger_key=f"maintenance:expire-tombstones-v{nv}",
+                     version=nv, files=files)
         return {"expired_buckets": len(victims), "version": nv}
 
     def expire_snapshots(self, keep_last: int = 2,
@@ -1920,56 +1803,76 @@ class LakeTable:
             if e.bucket in blooms:
                 e.bloom = blooms[e.bucket]
 
-    def _commit(self, parent: Manifest, files: list[FileEntry], schema: T.StructType,
-                schema_version: int, ledger_key: str, source_id: str,
-                batch_id, lease_token, metrics: dict, lineage,
-                version: int | None = None) -> int:
+    def _write_snapshot(self, m: Manifest, df: DataFrame,
+                        buckets: set[int] | None, n_buckets: int | None = None,
+                        carry_all: bool = False, **write_kw):
+        """Write `df` as the data of `m`'s next snapshot; returns (version,
+        new files, full file list). `df` rewrites `buckets` (None: every
+        bucket, counted under `n_buckets`); `m`'s other files carry over —
+        all of them with `carry_all` (merge-on-read deltas add to a bucket
+        instead of replacing it)."""
+        n_buckets = n_buckets or m.n_buckets
+        nv = self.store.next_version()
+        new_files = self._write_buckets(
+            df, m.bucket_key, n_buckets, nv,
+            n_buckets if buckets is None else len(buckets),
+            bloom_cols=m.bloom_cols, **write_kw)
+        if carry_all:
+            carried = list(m.files)
+        elif buckets is None:
+            carried = []
+        else:
+            carried = [f for f in m.files if f.bucket not in buckets]
+        return nv, new_files, carried + new_files
+
+    def _commit_batch(self, parent: Manifest, source_id: str, batch_id,
+                      metrics: dict, lineage: list[dict] | None = None,
+                      **changes) -> dict:
+        """Commit an applied batch: its ledger entry, and a lease whose resume
+        token is the (monotone) max_seq. Returns merge()'s result shape."""
         lease = {
             "id": source_id,  # reference: collection/container id (cosmos.ts:92-104)
-            "lease": lease_token if lease_token is not None
-                     else str(metrics.get("max_seq", parent.lease.get("lease", ""))),
+            "lease": str(metrics["max_seq"]),
             "batch_id": batch_id,
             "lineage": lineage or [],
             "metrics": metrics,
         }
-        from change_data_capturer_ms_spark.lake.manifest import prune_ledger
+        v = self._commit(parent, ledger_key=f"{source_id}:{batch_id}",
+                         lease=lease, **changes)
+        return {"skipped": False, "version": v, "batch_id": batch_id,
+                "metrics": metrics}
 
-        batches, watermarks = prune_ledger(
-            parent.committed_batches + [ledger_key], parent.batch_watermarks
-        )
+    def _commit(self, parent: Manifest, base: Manifest | None = None,
+                ledger_key: str | None = None, **changes) -> int:
+        """Commit the child of `parent`: `base` (default `parent`; rollback
+        passes the restored snapshot) with `changes` applied, under a fresh
+        version unless `version` is given, with `ledger_key` appended to the
+        pruned exactly-once ledger. Everything else — the lease included —
+        carries over unchanged."""
+        base = base or parent
+        if ledger_key is not None:
+            changes["committed_batches"], changes["batch_watermarks"] = \
+                prune_ledger(base.committed_batches + [ledger_key],
+                             base.batch_watermarks)
+        if "version" not in changes:
+            changes["version"] = self.store.next_version()
+        new = replace(base, parent=parent.version, **changes)
         # a type-widening commit invalidates existing bloom bitmaps for the
         # widened columns: xxhash64 is type-sensitive, so probing an int-built
         # bitmap with the new bigint hash yields false "definitely absent" —
         # files wrongly pruned, rows silently unreadable. Strip those columns'
         # blooms from this commit's entries (pruning degrades to zone maps for
         # them; later rewrites rebuild blooms under the new type).
-        old_types = {f.name: f.dataType for f in parent.schema.fields}
-        changed = {f.name for f in schema.fields
-                   if f.name in old_types and f.dataType != old_types[f.name]}
-        if changed and any(f.bloom and (changed & f.bloom.keys())
-                           for f in files):
-            from dataclasses import replace as _dc_replace
-            files = [
-                _dc_replace(f, bloom={c: b for c, b in f.bloom.items()
-                                      if c not in changed} or None)
+        if new.schema_json != base.schema_json:
+            old_types = {f.name: f.dataType for f in base.schema.fields}
+            changed = {f.name for f in new.schema.fields
+                       if f.name in old_types and f.dataType != old_types[f.name]}
+            new.files = [
+                replace(f, bloom={c: b for c, b in f.bloom.items()
+                                  if c not in changed} or None)
                 if f.bloom and (changed & f.bloom.keys()) else f
-                for f in files
+                for f in new.files
             ]
-        new = Manifest(
-            version=version if version is not None else self.store.next_version(),
-            parent=parent.version,
-            schema_json=schema.json(),
-            schema_version=schema_version,
-            n_buckets=parent.n_buckets,
-            key_cols=parent.key_cols,
-            files=files,
-            committed_batches=batches,
-            lease=lease,
-            batch_watermarks=watermarks,
-            write_mode=parent.write_mode,
-            bloom_cols=parent.bloom_cols,
-            bucket_cols=list(parent.bucket_cols),
-        )
         self.store.commit(new, expected_parent=parent.version,
                           branch=self._branch)
         return new.version

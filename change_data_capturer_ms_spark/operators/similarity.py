@@ -73,10 +73,15 @@ def signbit_bucket(vec, bits: int = 4, stride: int = 4):
     Axis-aligned hyperplanes — crude but fully deterministic and oracle-rederivable;
     production swaps in seeded random hyperplanes (same plan shape, a dot product
     per bit).
+
+    A probe past the vector's end reads as bit 0 (try_element_at is NULL
+    there, like DuckDB list indexing) — element_at would throw under ANSI
+    mode, Spark 4's default, for vectors shorter than (bits-1)*stride+1.
     """
     bucket = F.lit(0)
     for j in range(bits):
-        bucket = bucket + F.when(F.element_at(vec, j * stride + 1) > 0, F.lit(2 ** j)).otherwise(F.lit(0))
+        bucket = bucket + F.when(F.try_element_at(vec, F.lit(j * stride + 1)) > 0,
+                                 F.lit(2 ** j)).otherwise(F.lit(0))
     return bucket.cast("int")
 
 

@@ -221,10 +221,15 @@ class ChangeLogReader:
         """Streaming read; checkpoint-based resume comes from Structured Streaming.
         `maxFilesPerTrigger` is the page-size knob (reference maxItemCount,
         cosmos.ts:30)."""
-        if self.schema is None:
-            # streaming parquet needs an explicit schema; infer once from the dir
-            self.schema = self.spark.read.parquet(self.log_path).schema
-        reader = self.spark.readStream.schema(self.schema)
+        # streaming parquet needs an explicit schema. Infer it per call with
+        # the same mergeSchema read as read_batch, and never cache it: an
+        # additive column that lands after the first drain must reach the
+        # next one (a schema passed to the constructor still wins)
+        schema = self.schema
+        if schema is None:
+            schema = (self.spark.read.option("mergeSchema", "true")
+                      .parquet(self.log_path).schema)
+        reader = self.spark.readStream.schema(schema)
         if max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
         return reader.parquet(self.log_path)

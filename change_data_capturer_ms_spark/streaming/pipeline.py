@@ -33,6 +33,8 @@ from change_data_capturer_ms_spark.functions.hashing import (
     content_sha256_builtin,
     content_sha256_pandas,
 )
+from change_data_capturer_ms_spark.functions.validate import validate_batch
+from change_data_capturer_ms_spark.lake.manifest import Manifest
 from change_data_capturer_ms_spark.lake.table import LakeTable
 from change_data_capturer_ms_spark.operators.dedupe import salted_repartition
 from change_data_capturer_ms_spark.sources.changelog import ChangeLogReader
@@ -46,6 +48,9 @@ from change_data_capturer_ms_spark.sources.changelog import ChangeLogReader
 # classify UDF is real per-event work (pre-r3c history measured a pipeline
 # where Catalyst pruned it as dead code).
 APPLY_SEMVER = "r3c"
+
+# the ref each micro-batch is staged on while audit_fn inspects it
+AUDIT_BRANCH = "cdc-audit"
 
 
 def _hist_batch_id(p: str) -> int:
@@ -118,7 +123,6 @@ class CDCPipeline:
         monitor_cols: list[str] | None = None,
         monitor_top_k: int = 20,
         audit_fn=None,
-        wap_branch: str | None = None,
         event_dedup_watermark: str | None = None,
     ):
         self.spark = spark
@@ -142,24 +146,15 @@ class CDCPipeline:
         # column per batch — opt in for low-cardinality columns (lang, op).
         self.monitor_cols = list(monitor_cols or [])
         self.monitor_top_k = monitor_top_k
-        # write-audit-publish gate: audit_fn(table, merge_result) runs AFTER the
-        # merge commit but BEFORE the lease advances or the queue produces;
-        # returning False / a reason string rolls the table back to the parent
-        # snapshot (manifest-only — no data rewrite, and the rollback restores
-        # the exactly-once ledger so the batch can legally re-apply later) and
-        # quarantines the batch rows for replay_quarantine. Iceberg's
-        # WAP / branch-validate-publish pattern on the engine's own primitives.
+        # write-audit-publish gate: each micro-batch's MERGE is staged on a
+        # BRANCH cut at the main head; audit_fn(staged_table, merge_result)
+        # inspects it BEFORE main, the lease or the queue move. Passing
+        # publishes via metadata-only fast_forward; returning False / a reason
+        # string drops the branch (main never exposes an unaudited snapshot,
+        # and the ledger never records the batch, so it can legally re-apply
+        # later) and quarantines the batch rows for replay_quarantine.
+        # Iceberg's branch write-audit-publish layout.
         self.audit_fn = audit_fn
-        # wap_branch (requires audit_fn): stage each micro-batch's MERGE on a
-        # BRANCH cut at the main head, audit the branch, and publish via
-        # metadata-only fast_forward — main never exposes an unaudited
-        # snapshot, not even transiently (the rollback-shaped gate above
-        # commits to main first, so a concurrent reader could glimpse the
-        # rejected snapshot between commit and rollback). Iceberg's
-        # branch-WAP layout proper; a failed audit just drops the branch.
-        if wap_branch is not None and audit_fn is None:
-            raise ValueError("wap_branch requires audit_fn")
-        self.wap_branch = wap_branch
         # at-least-once transport guard (operators/dedupe.py
         # streaming_dedupe_within_watermark): drop events whose identity
         # (`seq`) was already observed within the window, BEFORE the batch
@@ -256,12 +251,11 @@ class CDCPipeline:
 
     # -- apply ----------------------------------------------------------------
 
-    def _quarantine_audit_reject(self, batch_df: DataFrame, batch_id,
+    def _quarantine_audit_reject(self, captured: DataFrame, batch_id,
                                  reason: str) -> None:
         """Audit-rejected batch rows go to the DLQ for replay_quarantine; with
         no DLQ configured, refuse loudly rather than drop the batch silently."""
         if self.quarantine_dir:
-            captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
             (captured
              .withColumn("_reasons", F.array(F.lit(f"audit:{reason}")))
              .withColumn("_batch_id", F.lit(batch_id))
@@ -273,34 +267,68 @@ class CDCPipeline:
                 "batch silently")
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> dict:
-        """foreachBatch body: [validate →] prepare → merge (idempotent) → lease."""
-        # exactly-once short-circuit FIRST: a batch redelivered after a crash
-        # between the merge commit and the streaming checkpoint would otherwise
-        # (a) append its invalid rows to the DLQ a second time — every
-        # still-quarantined row counted and replayed twice forever — and
-        # (b) burn the full validate + planning scan before merge() no-ops.
-        if self.table.exists():
-            m0 = self.table.manifest()
-            if m0.is_committed(self.source_id, batch_id):
-                return {"skipped": True, "version": m0.version,
-                        "batch_id": batch_id}
+        """foreachBatch body: [validate →] prepare → merge (idempotent)
+        [→ audit] → lease sidecar [+ monitor] → [queue]."""
+        m = self.table.manifest() if self.table.exists() else None
+        # exactly-once short-circuit: a batch redelivered after a crash between
+        # the merge commit and the streaming checkpoint skips the DLQ append
+        # (its invalid rows are already quarantined) and the merge, but still
+        # runs the idempotent tail — the crash may have come before the
+        # sidecar or the queue caught up.
+        redelivered = m is not None and m.is_committed(self.source_id, batch_id)
         if self.quarantine_dir:
             # schema-on-read enforcement (reference io-ts decode-or-Left,
             # cosmos/utils.ts:76-91): invalid rows go to the DLQ, valid rows on
-            from change_data_capturer_ms_spark.functions.validate import validate_batch
-
             batch_df, quarantine = validate_batch(batch_df)
-            (quarantine.withColumn("_batch_id", F.lit(batch_id))
-             .write.mode("append").parquet(self.quarantine_dir))
+            if not redelivered:
+                (quarantine.withColumn("_batch_id", F.lit(batch_id))
+                 .write.mode("append").parquet(self.quarantine_dir))
+        captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
+        if redelivered:
+            if self.audit_fn is not None:
+                # a crash between fast_forward and the ref drop left it behind
+                self.table.drop_branch(AUDIT_BRANCH)
+            result = {"skipped": True, "version": m.version, "batch_id": batch_id}
+        else:
+            result = self._merge(batch_df, captured, batch_id, m)
+            if result.get("audit_failed"):
+                return result
+        lease = self.table.lease()
+        if lease.get("batch_id") == batch_id:
+            # the sidecar follows the table; a redelivered batch that is no
+            # longer the table's latest must not regress it
+            if self.monitor_cols:
+                lease["monitor"] = self._monitor_summary(captured)
+            self._write_lease(lease)
+        if self.queue_sink is not None:
+            # produce the RAW captured rows (the reference queues the change
+            # documents themselves) — no UDF columns, so this extra pass stays
+            # a cheap scan; the sink's marker makes replays no-ops
+            result["queue"] = self.queue_sink.produce(
+                captured, batch_id=batch_id, source_id=self.source_id
+            )
+        return result
+
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
+        """prepare_batch under this pipeline's options, creating the table on
+        first use — CREATE TABLE IF NOT EXISTS semantics (reference
+        getOrCreateMongoCollection, src/capturer/mongo/utils.ts:51-70):
+        payload schema = prepared minus seq/op."""
         prepared = prepare_batch(batch_df, self.cfg, self.use_pandas_udfs,
                                  flatten_props=self.flatten_props)
         if not self.table.exists():
-            # CREATE TABLE IF NOT EXISTS semantics (reference getOrCreateMongoCollection,
-            # /root/reference/src/capturer/mongo/utils.ts:51-70): payload schema =
-            # prepared minus the seq/op control columns
             from pyspark.sql import types as T
             payload = [f for f in prepared.schema.fields if f.name not in ("seq", "op")]
             self.table.create(T.StructType(payload))
+        return prepared
+
+    def _merge(self, batch_df: DataFrame, captured: DataFrame, batch_id,
+               m: Manifest | None) -> dict:
+        """Prepare and MERGE one validated batch (creating the table on the
+        first one); with audit_fn, stage it on AUDIT_BRANCH and publish only
+        what passes."""
+        prepared = self._prepare(batch_df)
+        m = m or self.table.manifest()
 
         # ONE cheap planning job over pruned raw columns yields BOTH the
         # per-input-partition lineage (north_star) and the per-bucket stats the
@@ -309,14 +337,12 @@ class CDCPipeline:
         # 100 TB config — O(10^4-10^5) buckets × thousands of input partitions —
         # the old (p, bucket) grouping would be a multi-GB driver collect).
         # Still a single shuffle/job; the Arrow-UDF transform is untouched here
-        # (columns pruned) and runs only in the MERGE write job.
+        # (columns pruned) and runs only in the MERGE write job. The bucket
+        # layout is the manifest's, not cfg's.
         from change_data_capturer_ms_spark.lake.table import bucket_expr
 
-        m = self.table.manifest()  # bucket layout is the manifest's, not cfg's
-        keys = m.key_cols
         pre = (
-            batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
-            .select(*keys, "seq")
+            captured.select(*m.key_cols, "seq")
             .withColumn("_bucket", bucket_expr(m.bucket_key, m.n_buckets))
             .withColumn("p", F.spark_partition_id())
         )
@@ -349,64 +375,29 @@ class CDCPipeline:
             lineage=lineage,
             planning_stats=planning_stats,
         )
-        if self.wap_branch is not None:
-            # branch-WAP proper: stage the merge on a branch cut at the main
-            # head (dropping any stale ref a previously rejected batch left),
-            # audit the BRANCH, publish metadata-only via fast_forward. Main
-            # never exposes an unaudited snapshot, not even transiently; a
-            # failed audit costs one dropped ref, no rollback commit. A crash
-            # after fast_forward redelivers the batch, which no-ops on the
-            # published ledger (exactly-once preserved).
-            self.table.drop_branch(self.wap_branch)
-            self.table.create_branch(self.wap_branch)
-            staged = self.table.branch(self.wap_branch)
-            result = staged.merge(prepared, **merge_kwargs)
-            if not result.get("skipped"):
-                verdict = self.audit_fn(staged, result)
-                if verdict is not None and verdict is not True:
-                    reason = ("audit rejected batch" if verdict is False
-                              else str(verdict))
-                    main_v = self.table.manifest().version
-                    self.table.drop_branch(self.wap_branch)
-                    self._quarantine_audit_reject(batch_df, batch_id, reason)
-                    return {"skipped": False, "audit_failed": True,
-                            "reason": reason, "version": main_v,
-                            "batch_id": batch_id,
-                            "metrics": {"rows": 0, "upserts": 0, "deletes": 0}}
-            self.table.fast_forward(self.wap_branch)
-            self.table.drop_branch(self.wap_branch)
-        else:
-            result = self.table.merge(prepared, **merge_kwargs)
-        if (self.wap_branch is None and self.audit_fn is not None
-                and not result.get("skipped")):
-            verdict = self.audit_fn(self.table, result)
-            if verdict is not None and verdict is not True:
-                reason = "audit rejected batch" if verdict is False else str(verdict)
-                # the merge's parent from the manifest ancestry, NOT version-1:
-                # versions allocate from a global counter once branches exist
-                parent = self.table.manifest(int(result["version"])).parent
-                self.table.rollback(version=parent)
-                restored = self.table.lease()
-                if restored:  # empty ⇒ rolled back to the pre-first-batch table
-                    self._write_lease(restored)  # sidecar follows the table
-                self._quarantine_audit_reject(batch_df, batch_id, reason)
-                return {"skipped": False, "audit_failed": True, "reason": reason,
-                        "version": parent, "batch_id": batch_id,
-                        "metrics": {"rows": 0, "upserts": 0, "deletes": 0}}
+        if self.audit_fn is None:
+            return self.table.merge(prepared, **merge_kwargs)
+        # stage on a branch cut at the main head (dropping any stale ref a
+        # crash left), audit the BRANCH, publish metadata-only. A crash after
+        # fast_forward redelivers the batch, which no-ops on the published
+        # ledger (exactly-once preserved).
+        self.table.drop_branch(AUDIT_BRANCH)
+        self.table.create_branch(AUDIT_BRANCH)
+        staged = self.table.branch(AUDIT_BRANCH)
+        result = staged.merge(prepared, **merge_kwargs)
         if not result.get("skipped"):
-            lease = self.table.lease()
-            if self.monitor_cols:
-                captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
-                lease["monitor"] = self._monitor_summary(captured)
-            self._write_lease(lease)
-        if self.queue_sink is not None:
-            # produce the RAW captured rows (the reference queues the change
-            # documents themselves) — no UDF columns, so this extra pass stays
-            # a cheap scan; the sink's marker makes replays no-ops
-            captured = batch_df.filter(F.col("op").isin(*self.cfg.captured_ops))
-            result["queue"] = self.queue_sink.produce(
-                captured, batch_id=batch_id, source_id=self.source_id
-            )
+            verdict = self.audit_fn(staged, result)
+            if verdict is not None and verdict is not True:
+                reason = ("audit rejected batch" if verdict is False
+                          else str(verdict))
+                self.table.drop_branch(AUDIT_BRANCH)
+                self._quarantine_audit_reject(captured, batch_id, reason)
+                return {"skipped": False, "audit_failed": True,
+                        "reason": reason, "version": m.version,
+                        "batch_id": batch_id,
+                        "metrics": {"rows": 0, "upserts": 0, "deletes": 0}}
+        self.table.fast_forward(AUDIT_BRANCH)
+        self.table.drop_branch(AUDIT_BRANCH)
         return result
 
     def _monitor_summary(self, captured: DataFrame) -> dict:
@@ -485,8 +476,6 @@ class CDCPipeline:
                 os.rename(old, qdir)
             else:
                 return {"replayed": 0, "still_quarantined": 0}
-        from change_data_capturer_ms_spark.functions.validate import validate_batch
-
         q = self.spark.read.parquet(qdir).drop("_reasons", "_batch_id")
         cand = fix(q) if fix is not None else q
         valid, still_bad = validate_batch(cand)
@@ -496,12 +485,7 @@ class CDCPipeline:
          .write.mode("overwrite").parquet(tmp))
         n_bad = self.spark.read.parquet(tmp).count()
 
-        prepared = prepare_batch(valid, self.cfg, self.use_pandas_udfs,
-                                 flatten_props=self.flatten_props)
-        if not self.table.exists():
-            from pyspark.sql import types as T
-            payload = [f for f in prepared.schema.fields if f.name not in ("seq", "op")]
-            self.table.create(T.StructType(payload))
+        prepared = self._prepare(valid)
         result = self.table.merge(
             prepared, seq_col="seq", op_col="op",
             batch_id=f"dlq-replay-{replay_id}", source_id=self.source_id,

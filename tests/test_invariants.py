@@ -153,6 +153,27 @@ class TestSchemaEvolution:
         assert updated.count() > 0
         assert updated.filter(F.col("stars").isNull()).count() == 0
 
+    def test_additive_column_reaches_the_stream(self, spark, tmpdir_path):
+        """E20 on the stream path: a column that first lands in the log after
+        the first run_stream reaches the table on the next one — read_stream
+        infers the log schema with mergeSchema per call and caches none, so
+        read_batch sees the column too."""
+        pipe, log_dir = _pipe(spark, tmpdir_path)
+        write_changelog(gen_changelog(spark, 500, seed=8, n_repos=10,
+                                      paths_per_repo=5), log_dir)
+        pipe.run_stream()
+        assert "stars" not in pipe.table.manifest().schema.fieldNames()
+
+        write_changelog(gen_changelog(spark, 200, seed=8, n_repos=10,
+                                      paths_per_repo=5, start_seq=500,
+                                      evolution_point=0), log_dir)
+        pipe.run_stream()
+        assert "stars" in pipe.table.manifest().schema.fieldNames()
+        updated = pipe.table.read().filter(F.col("_last_seq") >= 500)
+        assert updated.count() > 0
+        assert updated.filter(F.col("stars").isNull()).count() == 0
+        assert "stars" in pipe.reader.read_batch().columns
+
     def test_reader_projects_old_snapshots_with_new_schema(self, spark, tmpdir_path):
         pipe, log_dir = _pipe(spark, tmpdir_path)
         pipe.apply_batch(gen_changelog(spark, 500, seed=7), batch_id=0)

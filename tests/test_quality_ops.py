@@ -149,6 +149,37 @@ def test_semdedup_cell_cap_bounds_pair_join(spark):
     assert kept_under == [0]
 
 
+def test_signbit_bucket_short_vectors_match_duckdb(spark):
+    """Probes past a vector's end (4 dims at bits=8 probe element 29) read as
+    bit 0 instead of throwing INVALID_ARRAY_INDEX_IN_ELEMENT_AT under ANSI
+    mode; DuckDB list indexing past the end is NULL too, so both agree."""
+    import duckdb
+
+    from change_data_capturer_ms_spark.operators.similarity import signbit_bucket
+
+    vecs = [[1.0, -1.0, 1.0, 1.0], [-1.0, 1.0, 1.0, 1.0], [1.0] * 8, [1.0] * 40]
+    df = spark.createDataFrame([(v,) for v in vecs], "v array<double>")
+    got = [r["b"] for r in
+           df.select(signbit_bucket(F.col("v"), bits=8).alias("b")).collect()]
+    expr = " + ".join(f"CASE WHEN v[{j * 4 + 1}] > 0 THEN {2 ** j} ELSE 0 END"
+                      for j in range(8))
+    con = duckdb.connect()
+    want = [con.execute(f"SELECT {expr} FROM (SELECT ?::DOUBLE[] AS v)",
+                        [v]).fetchone()[0] for v in vecs]
+    assert got == want == [1, 0, 3, 255]
+
+
+def test_semdedup_over_cap_cell_with_short_vectors(spark):
+    """An over-cap cell of 4-dim vectors sub-splits with the default
+    sub_bits=8 (probing up to element 29) instead of crashing; only element
+    0's sign varies, so the split equals the sub_bits=1 one."""
+    rows = [(i, [0.01 if i < 10 else -0.01, 1.0, 1.0, 1.0]) for i in range(20)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kept = sorted(r["vec_id"] for r in
+                  semdedup(df, tau=0.999, n_cells=1, cell_cap=5).collect())
+    assert kept == [0, 10]
+
+
 def test_semdedup_auto_n_cells(spark):
     """n_cells=None auto-scales: clamp(ceil(rows/1024), 8, 4096) — 20 rows
     -> 8 cells; identical result to passing 8 explicitly."""
